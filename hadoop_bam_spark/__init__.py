@@ -19,3 +19,10 @@ This package re-expresses those capabilities Spark-first:
 """
 
 __version__ = "0.1.0"
+
+# Every Python worker that runs engine code imports this package (data
+# source unpickling, sink and operator closures), so this is where the
+# per-call zip re-read in PySpark's worker set-up gets cut.
+from hadoop_bam_spark import _zipcache
+
+_zipcache.install()

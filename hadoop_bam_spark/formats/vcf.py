@@ -217,5 +217,8 @@ def format_vcf_line(row: tuple, samples: list[str]) -> str:
         by_sample = {g[0]: g[2] for g in genotypes}
         for s in samples:
             fm = by_sample.get(s, {})
-            fields.append(":".join(fm.get(k, ".") for k in keys))
+            # absent key and present-but-null value are both missing: "."
+            fields.append(":".join(
+                "." if (v := fm.get(k)) is None else v for k in keys
+            ))
     return "\t".join(fields)

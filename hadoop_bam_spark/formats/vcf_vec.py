@@ -447,9 +447,7 @@ def format_vcf_chunk(batch, samples) -> Optional[bytes]:
             return None
         nk = int(counts[0])
         keys = fm.keys
-        vals = fm.items
-        if vals.null_count:
-            return None
+        vals = pc.fill_null(fm.items, ".")  # null value -> missing, as scalar
         pattern = keys[:nk].to_pylist()
         if len(set(pattern)) != nk:
             return None

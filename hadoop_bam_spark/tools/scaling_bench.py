@@ -79,7 +79,7 @@ for _ in range(reps):
         REGISTRY[n].fn(spark, sf_dir).count()
         dt = time.time() - t0
         out[n] = min(out.get(n, 1e18), dt)
-print("SCALING_JSON " + json.dumps({n: round(v, 3) for n, v in out.items()}))
+print("SCALING_JSON " + json.dumps(out))
 spark.stop()
 """
 
@@ -107,6 +107,41 @@ def _run(sf_dir: str, cpus: int, reps: int, names: list[str]) -> dict:
         os.unlink(path)
 
 
+def parse_cores(text: str) -> tuple[int, int]:
+    """``"8,32"`` -> ``(8, 32)``; anything but two distinct positive core
+    counts is a usage error, not a receipt with ideal_ratio 1.0."""
+    try:
+        cores = sorted(int(x) for x in text.split(","))
+    except ValueError:
+        cores = []
+    if len(cores) != 2 or cores[0] < 1 or cores[0] == cores[1]:
+        raise SystemExit(
+            f"--cores needs exactly two distinct positive core counts "
+            f"(e.g. --cores=8,32), got {text!r}"
+        )
+    return cores[0], cores[1]
+
+
+def isolated_runs(names: list[str], lo: int, hi: int) -> list[tuple[str, int]]:
+    """(query, cores) subprocess order for ``--isolate``: the hi/lo order
+    alternates per query, so monotonic host drift lands on the low side
+    for half the queries and on the high side for the other half instead
+    of inflating every ratio."""
+    order = []
+    for i, n in enumerate(names):
+        pair = (hi, lo) if i % 2 == 0 else (lo, hi)
+        order.extend((n, c) for c in pair)
+    return order
+
+
+def core_ratio(t_lo: float | None, t_hi: float | None) -> float | None:
+    """t_lo / t_hi, or None when either wall is missing or t_hi is zero
+    (a measured 0.0 wall is a value, not a missing result)."""
+    if t_lo is None or t_hi is None or t_hi <= 0:
+        return None
+    return round(t_lo / t_hi, 2)
+
+
 def main(argv: list[str]) -> None:
     sf_dir = None
     cores = (8, 32)
@@ -116,7 +151,7 @@ def main(argv: list[str]) -> None:
     isolate = False
     for a in argv:
         if a.startswith("--cores="):
-            cores = tuple(int(x) for x in a.split("=", 1)[1].split(","))
+            cores = parse_cores(a.split("=", 1)[1])
         elif a.startswith("--queries="):
             names = a.split("=", 1)[1].split(",")
         elif a.startswith("--reps="):
@@ -129,14 +164,12 @@ def main(argv: list[str]) -> None:
             sf_dir = a
     if sf_dir is None:
         raise SystemExit(__doc__)
-    lo, hi = sorted(cores)
+    lo, hi = cores
     if isolate:
-        t_hi, t_lo = {}, {}
-        # interleave core counts per query so host drift degrades both
-        # sides of each ratio equally, not whichever ran second
-        for n in names:
-            t_hi.update(_run(sf_dir, hi, reps, [n]))
-            t_lo.update(_run(sf_dir, lo, reps, [n]))
+        walls = {lo: {}, hi: {}}
+        for n, c in isolated_runs(names, lo, hi):
+            walls[c].update(_run(sf_dir, c, reps, [n]))
+        t_lo, t_hi = walls[lo], walls[hi]
     else:
         t_hi = _run(sf_dir, hi, reps, names)
         t_lo = _run(sf_dir, lo, reps, names)
@@ -146,7 +179,7 @@ def main(argv: list[str]) -> None:
         per_query[n] = {
             f"wall_{lo}c": a,
             f"wall_{hi}c": b,
-            "core_ratio": round(a / b, 2) if a and b else None,
+            "core_ratio": core_ratio(a, b),
         }
     result = {
         "sf_dir": sf_dir,
@@ -155,6 +188,11 @@ def main(argv: list[str]) -> None:
         "reps": reps,
         "isolated_sessions": isolate,
         "per_query": per_query,
+        # walls a runner did not report (null above), vs a measured 0.0
+        "missing": [
+            f"{n}@{c}c" for n in names for c, t in ((lo, t_lo), (hi, t_hi))
+            if n not in t
+        ],
     }
     text = json.dumps(result, indent=1, sort_keys=True)
     print(text)
