@@ -1,24 +1,54 @@
-"""Distributed sinks: executors write headerless part files, the driver
-byte-concatenates them behind a fresh header and appends the format
-terminator — the reference's sharded-writer + merger contract
+"""Distributed sinks: one part protocol for every file format, batch and
+streaming — the reference's sharded-writer + merger contract
 (KeyIgnoringBAMOutputFormat.java:48-93, util/SAMFileMerger.java:46-149,
 util/VCFFileMerger.java:45-135, util/SAMOutputPreparer.java:61-128).
 
-Why this shape scales: each task writes its shard sequentially with no
-coordination; the merge is a driver-side byte copy (or FileSystem.concat
-where the DFS supports it) because BGZF streams are concatenatable when
-writers suppress the EOF terminator (BAMRecordWriter.java:128-140).
+Each format has ONE part codec (:class:`_Codec`) with four pieces:
 
-BAM sinks also build the ``.sbi`` splitting index inline during the write
-(one voffset every G records, reference SplittingBAMIndexer piggyback mode
-SplittingBAMIndexer.java:232-274) and merge the per-part indexes by offset
-shifting (SAMFileMerger.mergeSplittingBaiFiles, SAMFileMerger.java:105-149)
-— so files we write are re-readable with index-aligned splits, no guessing.
+- ``head``: the bytes before the first record. For BGZF formats the
+  header closes its own block, so records start on a block boundary;
+- ``body``: Arrow batches -> record bytes, part-local index stats and a
+  record count (the vectorized encoders in ``formats/*_venc.py`` and
+  ``formats/*_vec.py``);
+- ``tail``: the terminator (BGZF EOF, the CRAM EOF container, or nothing);
+- ``sidecars``: index files from ``[(stats, body_size)]`` and a header
+  length — the offset-shift merge of SAMFileMerger.java:105-149, so no
+  output is re-read (CRAM's ``.crai`` walks the finished file's container
+  headers; FASTA's ``.fai`` scans its lines).
+
+Every task writes its partition through :func:`_write_part` to an
+attempt-unique staged name, ``attempt-{taskAttemptId}-part-{idx:05d}{ext}``
+under ``<path>.__parts__``: a failed, retried or speculative attempt never
+shares a file with the attempt whose result the driver keeps, and the
+driver only ever reads the staged names the winning attempts returned.
+
+- **Merged** (default): tasks write the body alone; the driver
+  concatenates head + the parts in partition order + tail into ``path``
+  and builds the sidecars from the offset-shifted part stats. Byte
+  concatenation works because BGZF streams concatenate when the parts
+  carry no EOF block (BAMRecordWriter.java:128-140).
+- **Sharded** (``sharded=True``): tasks write head + body + tail, a
+  complete file with the merged file's layout, and build its sidecars
+  in-task with the same builder (``header_len = len(head)``). The driver
+  renames the shards into the ``path`` directory as
+  ``part-{idx:05d}{ext}`` and writes ``_manifest.json`` (format, total
+  and per-shard records and bytes). No output byte funnels through the
+  driver, and the sources read the directory natively.
+- **Streaming** (:mod:`hadoop_bam_spark.streaming.shard_sink`): each
+  micro-batch task writes head + body + tail through the same codecs;
+  :mod:`hadoop_bam_spark.streaming.shard_commit` commits the shards.
+
+Overwrite semantics: a merged write removes every sidecar of ``path`` that
+it did not produce itself (a ``.bai`` left by an earlier write points into
+bytes that no longer exist). A sharded write first removes the earlier
+``part-*`` shards, their sidecars and ``_manifest.json`` from ``path`` —
+the sources list the directory, so a smaller re-write must not leave old
+shards readable — and touches no other file there.
 """
 
 from __future__ import annotations
 
-import os
+import functools
 import shutil
 from typing import Optional
 
@@ -27,7 +57,7 @@ from pyspark.sql import DataFrame
 from hadoop_bam_spark import fs
 
 from hadoop_bam_spark.formats import bam, bgzf
-from hadoop_bam_spark.formats.sam import SAMHeader, format_sam_line
+from hadoop_bam_spark.formats.sam import SAMHeader
 from hadoop_bam_spark.formats.splitting_index import DEFAULT_GRANULARITY, SplittingIndex
 from hadoop_bam_spark.formats.vcf import VCFHeader, format_vcf_line
 
@@ -40,55 +70,266 @@ VCF_COLS = [
     "qual", "filters", "info", "genotypes",
 ]
 
+#: every index sidecar a source trusts next to a data file
+_SIDECARS = (".sbi", ".splitting-bai", ".bai", ".tbi", ".csi", ".crai",
+             ".fai", ".bgzfi")
 
-def _collect_parts_arrow(pre: DataFrame, parts_dir: str, write_part_batches):
-    """Arrow-batch variant of :func:`_collect_parts` for sinks with a
-    columnar encoder: ``write_part_batches(idx, arrow_batches) -> result``
-    runs per partition via ``mapInArrow`` (no Row materialization at all),
-    with the result shipped back as one pickled binary cell.
 
-    This supersedes the historical note below for the BAM path: the earlier
-    Arrow attempt lost because it still ran the per-record encoder over
-    ``to_pylist`` rows; with the tags map pre-split into key/value list
-    columns (JVM-side) and a vectorized batch encoder (formats/bam_venc.py)
-    the Arrow transfer is strictly a win."""
+def _bgzf_bytes(data: bytes) -> bytes:
+    """``data`` as BGZF blocks without an EOF block (b"" for no data)."""
+    import io
+
+    buf = io.BytesIO()
+    w = bgzf.BGZFWriter(buf, write_terminator=False)
+    w.write(data)
+    w.close()
+    return buf.getvalue()
+
+
+def _body_size(w: "bgzf.BGZFWriter") -> int:
+    """Compressed bytes a closed writer produced."""
+    return w.tell_voffset() >> 16
+
+
+class _Codec:
+    """One file format's part codec (see the module docstring).
+
+    ``cols`` is the column order ``body`` receives; each ``split_maps``
+    entry turns a map column into key and value list columns (JVM-side
+    ``map_keys``/``map_values`` in batch writes, the MapArray's offsets in
+    streaming writes), so no encoder converts Arrow map scalars per row."""
+
+    ext = ""  # shard and staged-part file extension
+    fmt = ""  # "format" in the sharded manifest
+    head = b""
+    tail = b""
+    sidecar_exts: tuple = ()
+    cols: tuple = ()
+    split_maps: dict = {}
+    #: array columns sent as [] instead of null: Spark's Arrow writer
+    #: spends ~5 µs a row on a null array (measured on a BED frame with
+    #: a null ``rest``), and the formatters write both alike
+    empty_for_null: tuple = ()
+
+    def select(self, df: DataFrame) -> DataFrame:
+        exprs = []
+        for c in self.cols:
+            if c in self.split_maps:
+                k, v = self.split_maps[c]
+                exprs += [f"map_keys(`{c}`) as {k}", f"map_values(`{c}`) as {v}"]
+            elif c in self.empty_for_null:
+                exprs.append(f"coalesce(`{c}`, array()) as `{c}`")
+            else:
+                exprs.append(f"`{c}`")
+        return df.selectExpr(*exprs)
+
+    def arrow_select(self, batch):
+        """:meth:`select` for an Arrow batch of the full row schema."""
+        import pyarrow as pa
+
+        arrays, names = [], []
+        for c in self.cols:
+            a = batch.column(c)
+            if c not in self.split_maps:
+                arrays.append(a)
+                names.append(c)
+                continue
+            if a.offset:  # list offsets with a null mask must start at 0
+                a = pa.concat_arrays([a])
+            mask = a.is_null()
+            for name, vals in zip(self.split_maps[c], (a.keys, a.items)):
+                arrays.append(pa.ListArray.from_arrays(a.offsets, vals, mask=mask))
+                names.append(name)
+        return pa.RecordBatch.from_arrays(arrays, names)
+
+    def body(self, f, batches) -> tuple:
+        """Write the records of ``batches`` to ``f``; return
+        ``(part-local stats, record count, body bytes)``."""
+        raise NotImplementedError
+
+    def sidecars(self, path: str, parts: list, header_len: int) -> None:
+        """Write ``path``'s index files from ``[(stats, body_size)]``."""
+
+
+def _staged_name(ctx, ext: str) -> str:
+    """Attempt-unique part name: two attempts of one partition never
+    write the same file."""
+    return f"attempt-{ctx.taskAttemptId()}-part-{ctx.partitionId():05d}{ext}"
+
+
+def _write_part(codec: _Codec, staged: str, batches, whole: bool) -> tuple:
+    """Executor half of the protocol: one partition's records to
+    ``staged`` — the body alone, or head + body + tail when ``whole`` (a
+    standalone file). Returns ``(stats, body_size, records)``. A failing
+    attempt removes its staged file."""
+    try:
+        with fs.open_file(staged, "wb") as f:
+            if whole:
+                f.write(codec.head)
+            stats, nrec, size = codec.body(f, batches)
+            if whole:
+                f.write(codec.tail)
+    except BaseException:
+        fs.remove(staged)
+        raise
+    return stats, size, nrec
+
+
+def _write(df: DataFrame, path: str, codec: _Codec, sharded: bool) -> None:
+    """Driver half of the protocol: one ``mapInArrow`` + ``collect`` job
+    runs :func:`_write_part` per partition (the result travels back as
+    one pickled binary cell), then merges or commits the winning parts."""
     import pickle
 
     import pyarrow as pa
 
+    parts_dir = path + ".__parts__"
     fs.makedirs(parts_dir)
 
-    def fn(batches):
+    def write_task(batches):
         from pyspark import TaskContext
 
-        idx = TaskContext.get().partitionId()
-        res = write_part_batches(idx, batches)
+        ctx = TaskContext.get()
+        staged = fs.join(parts_dir, _staged_name(ctx, codec.ext))
+        stats, size, nrec = _write_part(codec, staged, batches, whole=sharded)
+        if sharded:
+            codec.sidecars(staged, [(stats, size)], len(codec.head))
+        res = (ctx.partitionId(), staged, stats, size, nrec)
         yield pa.RecordBatch.from_arrays(
             [pa.array([pickle.dumps(res)], pa.binary())], ["res"]
         )
 
-    out = pre.mapInArrow(fn, "res binary").collect()
-    return sorted(pickle.loads(bytes(r["res"])) for r in out)
+    rows = codec.select(df).mapInArrow(write_task, "res binary").collect()
+    parts = sorted(
+        (pickle.loads(bytes(r["res"])) for r in rows), key=lambda p: p[0]
+    )
+    if sharded:
+        _commit_shards(path, codec, parts)
+    else:
+        with fs.open_file(path, "wb") as out:
+            out.write(codec.head)
+            for _, staged, _, _, _ in parts:
+                with fs.open_file(staged, "rb") as f:
+                    shutil.copyfileobj(f, out)
+            out.write(codec.tail)
+        for ext in _SIDECARS:
+            if ext not in codec.sidecar_exts:
+                fs.remove(path + ext)
+        codec.sidecars(
+            path, [(st, size) for _, _, st, size, _ in parts], len(codec.head)
+        )
+    fs.remove_tree(parts_dir)
 
 
-def _collect_parts(df: DataFrame, cols: list[str], parts_dir: str, write_part):
-    """Run ``write_part(idx, rows_iter) -> result`` on every partition and
-    return results ordered by partition index.
+def _commit_shards(path: str, codec: _Codec, parts: list) -> None:
+    """Sharded commit: replace the earlier shard set of ``path`` (its
+    ``part-*`` files and ``_manifest.json``; nothing else), rename this
+    write's shards and sidecars into place, write ``_manifest.json``.
+    Rename is a metadata operation on every supported filesystem, so the
+    commit moves no data bytes."""
+    import json
 
-    Transfer format, measured: an Arrow ``mapInArrow`` variant (batches +
-    per-type pylist conversion for the map/struct columns the encoders
-    need as dicts/tuples) was benchmarked against this Row path on a 600k
-    record BAM write and lost — 1.6 s vs 0.6 s warm — because pyarrow's
-    map-column ``to_pylist`` + dict rebuild costs more than Spark's batched
-    Row pickling. The per-record cost of a bespoke binary writer is the
-    encoder itself (struct.pack per record), not the JVM->Python transfer,
-    so Rows stay."""
-    fs.makedirs(parts_dir)
-    rdd = df.select(*cols).rdd
-    results = rdd.mapPartitionsWithIndex(
-        lambda idx, it: iter([write_part(idx, it)])
-    ).collect()
-    return sorted(results)
+    fs.makedirs(path)
+    try:
+        old = fs.listdir(path)
+    except OSError:
+        old = []
+    for name in old:
+        if name.startswith("part-") or name == "_manifest.json":
+            fs.remove(fs.join(path, name))
+    shards = []
+    for idx, staged, _, _, nrec in parts:
+        name = f"part-{idx:05d}{codec.ext}"
+        for ext in ("",) + codec.sidecar_exts:
+            fs.rename(staged + ext, fs.join(path, name + ext))
+        shards.append({"shard": name, "bytes": fs.file_size(fs.join(path, name)),
+                       "records": nrec})
+    body = {"shards": shards, "format": codec.fmt,
+            "records": sum(s["records"] for s in shards)}
+    with fs.open_file(fs.join(path, "_manifest.json"), "wb") as f:
+        f.write(json.dumps(body, indent=1).encode())
+
+
+def _refs_of(header: SAMHeader) -> list[tuple[str, int]]:
+    ordered = sorted(header.sequences.items(), key=lambda kv: kv[1][0])
+    return [(name, ln) for name, (_, ln) in ordered]
+
+
+class _BamCodec(_Codec):
+    """BAM: bam_venc blobs -> BGZF. Record voffsets (splitting-index
+    anchors every ``granularity`` records, BAI chunk spans) are recovered
+    analytically AFTER each bulk write from the writer's block table
+    (BGZFWriter.voffset_of_u) instead of a tell per record."""
+
+    ext, fmt = ".bam", "bam"
+    cols = tuple(SAM_COLS)
+    split_maps = {"tags": ("tag_keys", "tag_vals")}
+
+    def __init__(self, header: SAMHeader, refs, granularity: int = DEFAULT_GRANULARITY,
+                 index_bai: bool = False, index_splitting_bai: bool = False):
+        self.refs, self.granularity, self.index_bai = refs, granularity, index_bai
+        self.head = _bgzf_bytes(bam.encode_header(header, refs))
+        self.tail = bgzf.BGZF_EOF
+        self.sidecar_exts = (
+            (".sbi",) + ((".splitting-bai",) if index_splitting_bai else ())
+            + ((".bai",) if index_bai else ())
+        )
+
+    def body(self, f, batches):
+        import numpy as np
+
+        from hadoop_bam_spark.formats.bai import PartIndexStats
+        from hadoop_bam_spark.formats.bam_venc import BAMBatchEncoder
+
+        enc = BAMBatchEncoder(self.refs)
+        stats = PartIndexStats() if self.index_bai else None
+        offsets: list[int] = []
+        nrec = 0
+        w = bgzf.BGZFWriter(f, write_terminator=False)
+        for batch in batches:
+            blob, rec_lens, (rid, pos0, end0, mapped) = enc.encode_batch(batch)
+            if not len(rec_lens):
+                continue
+            u0 = w.u_total
+            w.write(blob)
+            u_starts = u0 + np.concatenate([[0], np.cumsum(rec_lens[:-1])])
+            if self.granularity:
+                first = (-nrec) % self.granularity
+                for i in range(first, len(rec_lens), self.granularity):
+                    offsets.append(w.voffset_of_u(int(u_starts[i])))
+            if stats is not None:
+                u_ends = u_starts + rec_lens
+                for i in range(len(rec_lens)):
+                    if rid[i] < 0 or pos0[i] < 0:
+                        stats.n_no_coor += 1
+                        continue
+                    stats.add(
+                        int(rid[i]), int(pos0[i]), int(end0[i]),
+                        bool(mapped[i]),
+                        w.voffset_of_u(int(u_starts[i])),
+                        w.voffset_of_u(int(u_ends[i])),
+                    )
+            nrec += len(rec_lens)
+        w.close()
+        return (offsets, stats), nrec, _body_size(w)
+
+    def sidecars(self, path, parts, header_len):
+        sbi = SplittingIndex.merge(
+            [(offs, size) for (offs, _), size in parts], header_len, self.granularity
+        )
+        with fs.open_file(path + ".sbi", "wb") as f:
+            sbi.write(f)
+        if ".splitting-bai" in self.sidecar_exts:
+            with fs.open_file(path + ".splitting-bai", "wb") as f:
+                sbi.write_reference_layout(f)
+        if self.index_bai:
+            from hadoop_bam_spark.formats.bai import bai_from_part_stats
+
+            bai = bai_from_part_stats(
+                [(st, size) for (_, st), size in parts], header_len, len(self.refs)
+            )
+            with fs.open_file(path + ".bai", "wb") as f:
+                bai.write(f)
 
 
 def write_bam(
@@ -123,126 +364,106 @@ def write_bam(
     directory of format files natively, so
     ``spark.read.format("bam").load(dir)`` round-trips with per-shard
     index pruning intact."""
-    if refs is None:
-        ordered = sorted(header.sequences.items(), key=lambda kv: kv[1][0])
-        refs = [(name, ln) for name, (_, ln) in ordered]
-    parts_dir = path + ".__parts__"
+    codec = _BamCodec(header, refs or _refs_of(header), index_granularity,
+                      index_bai, index_splitting_bai)
+    _write(df, path, codec, sharded)
 
-    def write_part_batches(idx: int, batches):
-        """Columnar part write: Arrow batches -> bam_venc blobs -> BGZF.
 
-        Record voffsets (splitting-index granularity anchors, BAI chunk
-        spans) are recovered analytically AFTER each bulk write via the
-        writer's block table (BGZFWriter.voffset_of_u) instead of a tell
-        per record — the per-record cost is gone from the hot path."""
-        import numpy as np
+class _CramCodec(_Codec):
+    """CRAM 3.0: Arrow batches accumulate to ``records_per_container``
+    rows and each container encodes through the vectorized cram_venc
+    column encoder — RR=true when ``reference`` is set (whole-contig numpy
+    compare), RR=false verbatim otherwise. A container whose batch shape
+    falls outside the fast path (VecUnsupported) degrades to the scalar
+    ``cram.encode_container`` for that container only — byte parity
+    between the two is property-tested (tests/test_cram_venc.py), so the
+    fallback changes speed, never bytes."""
 
-        from hadoop_bam_spark.formats.bam_venc import BAMBatchEncoder
+    ext, fmt = ".cram", "cram"
+    cols = tuple(SAM_COLS)
+    split_maps = {"tags": ("tag_keys", "tag_vals")}
 
-        part_path = fs.join(
-            parts_dir, f"part-{idx:05d}.bam" if sharded else f"part-{idx:05d}"
+    def __init__(self, header: SAMHeader, refs, records_per_container: int = 30000,
+                 records_per_slice: int = 10000, reference: Optional[str] = None,
+                 embed_reference: bool = False, codecs: str = "gzip",
+                 index_crai: bool = False):
+        import io
+
+        from hadoop_bam_spark.formats import cram
+
+        self.refs = refs
+        self.rpc, self.rps = records_per_container, records_per_slice
+        self.reference, self.embed, self.codecs = reference, embed_reference, codecs
+        buf = io.BytesIO()
+        cram.write_file_definition(buf)
+        self.head = buf.getvalue() + cram.encode_header_container(header.text)
+        self.tail = cram.EOF_CONTAINER_V3
+        self.sidecar_exts = (".crai",) if index_crai else ()
+
+    def body(self, f, batches):
+        import pyarrow as pa
+
+        from hadoop_bam_spark.formats import cram
+        from hadoop_bam_spark.formats.cram_venc import CRAMColumnEncoder, VecUnsupported
+
+        ref_index = {name: i for i, (name, _) in enumerate(self.refs)}
+        ref_names = [name for name, _ in self.refs]
+        ref_fasta = (
+            cram.FastaRef(self.reference, open_fn=fs.open_file)
+            if self.reference else None
         )
-        stats = None
-        if index_bai:
-            from hadoop_bam_spark.formats.bai import PartIndexStats
+        enc = CRAMColumnEncoder(
+            ref_index, ref_fasta=ref_fasta, ref_names=ref_names,
+            embed_reference=self.embed, codecs=self.codecs,
+        )
 
-            stats = PartIndexStats()
-        enc = BAMBatchEncoder(refs)
-        offsets: list[int] = []
-        nrec = 0
-        with fs.open_file(part_path, "wb") as f:
-            w = bgzf.BGZFWriter(f, write_terminator=sharded)
-            if sharded:
-                # a shard is a complete standalone BAM: header first,
-                # through the same writer so every recorded voffset is
-                # already file-absolute (no merge-time shifting)
-                w.write(bam.encode_header(header, refs))
-            for batch in batches:
-                blob, rec_lens, (rid, pos0, end0, mapped) = enc.encode_batch(batch)
-                if not len(rec_lens):
-                    continue
-                u0 = w.u_total
-                w.write(blob)
-                u_starts = u0 + np.concatenate(
-                    [[0], np.cumsum(rec_lens[:-1])]
+        def scalar_rows(tbl):
+            cols = [tbl.column(i).to_pylist() for i in range(tbl.num_columns)]
+            for vals in zip(*cols):
+                yield vals[:11] + (dict(zip(vals[11] or (), vals[12] or ())),)
+
+        counter = size = 0
+
+        def flush(tbl):
+            nonlocal counter, size
+            try:
+                blob = enc.encode_container(
+                    tbl, counter, records_per_slice=self.rps
                 )
-                if index_granularity:
-                    first = (-nrec) % index_granularity
-                    for i in range(first, len(rec_lens), index_granularity):
-                        offsets.append(w.voffset_of_u(int(u_starts[i])))
-                if stats is not None:
-                    u_ends = u_starts + rec_lens
-                    for i in range(len(rec_lens)):
-                        if rid[i] < 0 or pos0[i] < 0:
-                            stats.n_no_coor += 1
-                            continue
-                        stats.add(
-                            int(rid[i]), int(pos0[i]), int(end0[i]),
-                            bool(mapped[i]),
-                            w.voffset_of_u(int(u_starts[i])),
-                            w.voffset_of_u(int(u_ends[i])),
-                        )
-                nrec += len(rec_lens)
-            w.close()
-        size = fs.file_size(part_path)
-        if sharded:
-            # per-shard sidecars, written in-task: voffsets are already
-            # file-absolute (header went through the same writer)
-            sbi = SplittingIndex(index_granularity, offsets, size)
-            with fs.open_file(part_path + ".sbi", "wb") as f2:
-                sbi.write(f2)
-            if index_splitting_bai:
-                with fs.open_file(part_path + ".splitting-bai", "wb") as f2:
-                    sbi.write_reference_layout(f2)
-            if index_bai:
-                from hadoop_bam_spark.formats.bai import bai_from_part_stats
+            except VecUnsupported:
+                blob = cram.encode_container(
+                    list(scalar_rows(tbl)), ref_index, counter,
+                    ref_fasta=ref_fasta, ref_names=ref_names,
+                    records_per_slice=self.rps,
+                    embed_reference=self.embed, codecs=self.codecs,
+                )
+            f.write(blob)
+            size += len(blob)
+            counter += tbl.num_rows
 
-                bai = bai_from_part_stats([(stats, size)], 0, len(refs))
-                with fs.open_file(part_path + ".bai", "wb") as f2:
-                    bai.write(f2)
-        return (idx, part_path, size, offsets, stats, nrec)
+        pend: list = []
+        pend_rows = 0
+        for batch in batches:
+            pend.append(batch)
+            pend_rows += batch.num_rows
+            while pend_rows >= self.rpc:
+                tbl = pa.Table.from_batches(pend)
+                flush(tbl.slice(0, self.rpc))
+                rest = tbl.slice(self.rpc)
+                pend = rest.to_batches() if rest.num_rows else []
+                pend_rows = rest.num_rows
+        if pend_rows:
+            flush(pa.Table.from_batches(pend))
+        return None, counter, size
 
-    pre = df.selectExpr(
-        *SAM_COLS[:-1],
-        "map_keys(tags) as tag_keys",
-        "map_values(tags) as tag_vals",
-    )
-    parts = _collect_parts_arrow(pre, parts_dir, write_part_batches)
-    if sharded:
-        sidecars = [".sbi"] + ([".splitting-bai"] if index_splitting_bai else []) \
-            + ([".bai"] if index_bai else [])
-        _commit_shards(path, parts_dir, [p for _, p, _, _, _, _ in parts],
-                       sidecars, records=[n for _, _, _, _, _, n in parts],
-                       fmt="bam")
-        return
-    with fs.open_file(path, "wb") as out:
-        w = bgzf.BGZFWriter(out, write_terminator=False)
-        w.write(bam.encode_header(header, refs))
-        w.close()
-        header_len = out.tell()
-        for _, part_path, _, _, _, _ in parts:
-            with fs.open_file(part_path, "rb") as f:
-                shutil.copyfileobj(f, out)
-        out.write(bgzf.BGZF_EOF)
-    sbi = SplittingIndex.merge(
-        [(offs, size) for _, _, size, offs, _, _ in parts], header_len, index_granularity
-    )
-    with fs.open_file(path + ".sbi", "wb") as f:
-        sbi.write(f)
-    if index_splitting_bai:
-        with fs.open_file(path + ".splitting-bai", "wb") as f:
-            sbi.write_reference_layout(f)
-    if index_bai:
-        # merge the per-part stats accumulated during the executor writes —
-        # no post-merge re-read of the output (formats/bai.py)
-        from hadoop_bam_spark.formats.bai import bai_from_part_stats
+    def sidecars(self, path, parts, header_len):
+        """``.crai`` from a header-only container walk of the finished
+        file (the source plans splits and prunes intervals from it)."""
+        if self.sidecar_exts:
+            from hadoop_bam_spark.formats import crai
 
-        bai = bai_from_part_stats(
-            [(stats, size) for _, _, size, _, stats, _ in parts], header_len, len(refs)
-        )
-        with fs.open_file(path + ".bai", "wb") as f:
-            bai.write(f)
-    fs.remove_tree(parts_dir)
+            crai.write_crai(crai.build_crai(path, open_fn=fs.open_file),
+                            path + ".crai", open_fn=fs.open_file)
 
 
 def write_cram(
@@ -300,130 +521,10 @@ def write_cram(
     FORMAT_BENCH.md r9). Readers need htslib-compatible rANS decode
     (this engine's reader, samtools, htsjdk all qualify). Default stays
     gzip: write speed is the sink's headline contract."""
-    from hadoop_bam_spark.formats import cram
-
-    if refs is None:
-        ordered = sorted(header.sequences.items(), key=lambda kv: kv[1][0])
-        refs = [(name, ln) for name, (_, ln) in ordered]
-    parts_dir = path + ".__parts__"
-    ref_index = {name: i for i, (name, _) in enumerate(refs)}
-
-    def write_part_batches(idx: int, batches):
-        """Columnar part write (both reference modes): Arrow batches
-        accumulate to ``records_per_container`` rows, each container
-        encodes through the vectorized cram_venc column encoder — RR=true
-        when ``reference`` is set (whole-contig numpy compare, r8),
-        RR=false verbatim otherwise; a container whose batch shape falls
-        outside the fast path (VecUnsupported) degrades to the scalar
-        ``cram.encode_container`` for that container only — byte parity
-        between the two is property-tested (tests/test_cram_venc.py),
-        so the fallback changes speed, never bytes."""
-        import pyarrow as pa
-
-        from hadoop_bam_spark.formats.cram_venc import (
-            CRAMColumnEncoder,
-            VecUnsupported,
-        )
-
-        part_path = fs.join(
-            parts_dir, f"part-{idx:05d}.cram" if sharded else f"part-{idx:05d}"
-        )
-        ref_fasta = (
-            cram.FastaRef(reference, open_fn=fs.open_file)
-            if reference
-            else None
-        )
-        ref_names = [name for name, _ in refs]
-        enc = CRAMColumnEncoder(
-            ref_index, ref_fasta=ref_fasta, ref_names=ref_names,
-            embed_reference=embed_reference, codecs=codecs,
-        )
-
-        def scalar_rows(tbl):
-            cols = [tbl.column(i).to_pylist() for i in range(tbl.num_columns)]
-            for vals in zip(*cols):
-                yield vals[:11] + (dict(zip(vals[11] or (), vals[12] or ())),)
-
-        with fs.open_file(part_path, "wb") as f:
-            if sharded:
-                cram.write_file_definition(f)
-                f.write(cram.encode_header_container(header.text))
-            counter = 0
-            pend: list = []
-            pend_rows = 0
-
-            def flush(tbl):
-                nonlocal counter
-                try:
-                    f.write(enc.encode_container(
-                        tbl, counter, records_per_slice=records_per_slice
-                    ))
-                except VecUnsupported:
-                    f.write(cram.encode_container(
-                        list(scalar_rows(tbl)), ref_index, counter,
-                        ref_fasta=ref_fasta, ref_names=ref_names,
-                        records_per_slice=records_per_slice,
-                        embed_reference=embed_reference,
-                        codecs=codecs,
-                    ))
-                counter += tbl.num_rows
-
-            for batch in batches:
-                pend.append(batch)
-                pend_rows += batch.num_rows
-                while pend_rows >= records_per_container:
-                    tbl = pa.Table.from_batches(pend)
-                    flush(tbl.slice(0, records_per_container))
-                    rest = tbl.slice(records_per_container)
-                    pend = rest.to_batches() if rest.num_rows else []
-                    pend_rows = rest.num_rows
-            if pend_rows:
-                flush(pa.Table.from_batches(pend))
-            if sharded:
-                f.write(cram.EOF_CONTAINER_V3)
-        if sharded and index_crai:
-            _crai_sidecar(part_path)
-        return (idx, part_path, counter)
-
-    def _crai_sidecar(part_path):
-        from hadoop_bam_spark.formats import crai as crai_mod
-
-        crai_mod.write_crai(
-            crai_mod.build_crai(part_path, open_fn=fs.open_file),
-            part_path + ".crai",
-            open_fn=fs.open_file,
-        )
-
-    pre = df.selectExpr(
-        *SAM_COLS[:-1],
-        "map_keys(tags) as tag_keys",
-        "map_values(tags) as tag_vals",
-    )
-    parts = _collect_parts_arrow(pre, parts_dir, write_part_batches)
-    if sharded:
-        _commit_shards(path, parts_dir, [p for _, p, _ in parts],
-                       [".crai"] if index_crai else [],
-                       records=[n for _, _, n in parts], fmt="cram")
-        return
-    with fs.open_file(path, "wb") as out:
-        cram.write_file_definition(out)
-        out.write(cram.encode_header_container(header.text))
-        for _, part_path, _ in parts:
-            with fs.open_file(part_path, "rb") as f:
-                shutil.copyfileobj(f, out)
-        out.write(cram.EOF_CONTAINER_V3)
-    fs.remove_tree(parts_dir)
-    if index_crai:
-        # .crai sidecar from a header-only container walk of the merged
-        # output (the public CRAM index; the source plans splits and prunes
-        # intervals from it without touching the data file)
-        from hadoop_bam_spark.formats import crai as crai_mod
-
-        crai_mod.write_crai(
-            crai_mod.build_crai(path, open_fn=fs.open_file),
-            path + ".crai",
-            open_fn=fs.open_file,
-        )
+    codec = _CramCodec(header, refs or _refs_of(header), records_per_container,
+                       records_per_slice, reference, embed_reference, codecs,
+                       index_crai)
+    _write(df, path, codec, sharded)
 
 
 def write_any_sam(
@@ -457,124 +558,133 @@ def write_any_sam(
         )
 
 
-def _write_text_parts(df: DataFrame, cols, path, parts_dir, header_text: str,
-                      line_fn, compress: bool, chunk_fn=None,
-                      shard_ext: str | None = None) -> None:
-    """``chunk_fn`` (RecordBatch -> newline-terminated bytes) switches the
-    partition write to the vectorized Arrow path (no Row materialization);
-    ``line_fn`` stays as the per-row formatter otherwise.
+class _TextCodec(_Codec):
+    """Line-oriented formats: ``chunk_fn(batch)`` returns the batch's
+    newline-terminated lines; BGZF-compressed when ``compress``.
 
-    ``shard_ext`` (e.g. ``".vcf.bgz"``) switches to sharded output: every
-    part becomes a complete standalone file (own header, own BGZF EOF)
-    committed into the ``path`` directory by rename — no driver merge."""
-    sharded = shard_ext is not None
+    ``tabix=(preset, span_fn)`` accumulates ``.tbi`` stats while writing:
+    ``span_fn(batch)`` gives each record's (contig, beg0, end0) and the
+    record voffsets come from the newline positions in the formatted
+    chunk, the way the BAM codec takes them from ``rec_lens``. ``preset``
+    is the tabix (format, seq, begin, end) column preset."""
 
-    def _open_part(idx):
-        name = f"part-{idx:05d}{shard_ext}" if sharded else f"part-{idx:05d}"
-        return fs.join(parts_dir, name)
+    def __init__(self, fmt: str, ext: str, cols, chunk_fn, compress: bool,
+                 header: str = "", tabix=None, split_maps=None, empty_for_null=()):
+        self.fmt, self.cols, self.chunk_fn = fmt, tuple(cols), chunk_fn
+        self.ext = ext + (".bgz" if compress else "")
+        self.split_maps, self.empty_for_null = split_maps or {}, empty_for_null
+        self.compress, self.tabix = compress, tabix
+        self.head = _bgzf_bytes(header.encode()) if compress else header.encode()
+        self.tail = bgzf.BGZF_EOF if compress else b""
+        self.sidecar_exts = (".tbi",) if tabix else ()
 
-    if chunk_fn is not None:
-        def write_part_batches(idx: int, batches):
-            part_path = _open_part(idx)
-            with fs.open_file(part_path, "wb") as f:
-                if compress:
-                    w = bgzf.BGZFWriter(f, write_terminator=sharded)
-                    if sharded:
-                        w.write(header_text.encode())
-                    for b in batches:
-                        w.write(chunk_fn(b))
-                    w.close()
-                else:
-                    if sharded:
-                        f.write(header_text.encode())
-                    for b in batches:
-                        f.write(chunk_fn(b))
-            return (idx, part_path)
+    def body(self, f, batches):
+        from hadoop_bam_spark.formats.bai import PartIndexStats
 
-        parts = _collect_parts_arrow(
-            df.select(*cols), parts_dir, write_part_batches
-        )
-    else:
-        def write_part(idx: int, rows):
-            part_path = _open_part(idx)
-            with fs.open_file(part_path, "wb") as f:
-                if compress:
-                    w = bgzf.BGZFWriter(f, write_terminator=sharded)
-                    if sharded:
-                        w.write(header_text.encode())
-                    for r in rows:
-                        w.write((line_fn(r) + "\n").encode())
-                    w.close()
-                else:
-                    if sharded:
-                        f.write(header_text.encode())
-                    for r in rows:
-                        f.write((line_fn(r) + "\n").encode())
-            return (idx, part_path)
-
-        parts = _collect_parts(df, cols, parts_dir, write_part)
-    if sharded:
-        _commit_shards(path, parts_dir, [p for _, p in parts], [])
-        return
-    _merge_text_parts(path, parts_dir, parts, header_text, compress)
-
-
-def _commit_shards(path: str, parts_dir: str, shard_paths: list[str],
-                   sidecar_exts: list[str], records: list[int] | None = None,
-                   fmt: str = "") -> None:
-    """Rename executor-written complete shards (+ sidecars) into ``path``
-    and write ``_manifest.json``. Rename is a metadata operation on every
-    supported filesystem, so the commit moves no data bytes."""
-    import json
-
-    fs.makedirs(path)
-    manifest = []
-    for i, part_path in enumerate(shard_paths):
-        name = part_path.rsplit("/", 1)[-1]
-        fs.rename(part_path, fs.join(path, name))
-        for ext in sidecar_exts:
-            fs.rename(part_path + ext, fs.join(path, name + ext))
-        entry = {"shard": name, "bytes": fs.file_size(fs.join(path, name))}
-        if records is not None:
-            entry["records"] = records[i]
-        manifest.append(entry)
-    body = {"shards": manifest}
-    if fmt:
-        body["format"] = fmt
-    if records is not None:
-        body["records"] = sum(records)
-    with fs.open_file(fs.join(path, "_manifest.json"), "wb") as f:
-        f.write(json.dumps(body, indent=1).encode())
-    fs.remove_tree(parts_dir)
-
-
-def _merge_text_parts(path, parts_dir, parts, header_text: str,
-                      compress: bool) -> None:
-    with fs.open_file(path, "wb") as out:
-        if compress:
-            w = bgzf.BGZFWriter(out, write_terminator=False)
-            w.write(header_text.encode())
+        w = bgzf.BGZFWriter(f, write_terminator=False) if self.compress else None
+        stats = PartIndexStats() if self.tabix else None
+        nrec = size = 0
+        for batch in batches:
+            blob = self.chunk_fn(batch)
+            nrec += batch.num_rows
+            if w is None:
+                f.write(blob)
+                size += len(blob)
+                continue
+            u0 = w.u_total
+            w.write(blob)
+            if stats is not None and batch.num_rows:
+                self._index(stats, w, batch, blob, u0)
+        if w is not None:
             w.close()
-        else:
-            out.write(header_text.encode())
-        for _, part_path in parts:
-            with fs.open_file(part_path, "rb") as f:
-                shutil.copyfileobj(f, out)
-        if compress:
-            out.write(bgzf.BGZF_EOF)
-    fs.remove_tree(parts_dir)
+            size = _body_size(w)
+        return stats, nrec, size
+
+    def _index(self, stats, w, batch, blob: bytes, u0: int) -> None:
+        import numpy as np
+
+        keys, beg0, end0 = self.tabix[1](batch)
+        nl = np.flatnonzero(np.frombuffer(blob, np.uint8) == 10)
+        if len(nl) != len(keys):
+            raise ValueError(f"{self.fmt} record text contains a newline")
+        ends = u0 + nl + 1
+        starts = np.concatenate([[u0], ends[:-1]])
+        vof = w.voffset_of_u
+        for key, b, e, s, t in zip(keys, beg0.tolist(), end0.tolist(),
+                                   starts.tolist(), ends.tolist()):
+            stats.add(key, b, e, True, vof(s), vof(t))
+
+    def sidecars(self, path, parts, header_len):
+        if not self.tabix:
+            return
+        from hadoop_bam_spark.formats.bai import merge_part_stats
+        from hadoop_bam_spark.formats.tabix import TabixIndex, write_tabix
+
+        # contig order of first appearance across the parts
+        names = list(dict.fromkeys(k for st, _ in parts for k in st.order))
+        merged = merge_part_stats(parts, header_len, names)
+        merged.pop("__n_no_coor__")
+        write_tabix(TabixIndex(names, [merged[n] for n in names],
+                               *self.tabix[0], ord("#"), 0, 0),
+                    path + ".tbi", open_fn=fs.open_file)
+
+
+def _contigs(batch) -> list:
+    """The contig column as Python strs, converted once per distinct
+    name (``to_pylist`` on the column costs ~1 µs a row)."""
+    import pyarrow.compute as pc
+
+    d = pc.dictionary_encode(batch.column("contig"))
+    names = d.dictionary.to_pylist()
+    return [names[i] for i in d.indices.to_numpy(zero_copy_only=False).tolist()]
+
+
+def _col_np(batch, name: str):
+    import numpy as np
+
+    return np.asarray(batch.column(name).to_numpy(zero_copy_only=False), np.int64)
+
+
+def _vcf_span(batch):
+    """VCF record span: POS .. POS + len(REF), at least one base."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    beg0 = _col_np(batch, "start") - 1
+    ref_len = np.asarray(pc.utf8_length(pc.fill_null(batch.column("ref"), "N")),
+                         np.int64)
+    return _contigs(batch), beg0, beg0 + np.maximum(ref_len, 1)
+
+
+def _zero_based_span(batch):
+    """BED/bedGraph span: zero-length features (end == start-1,
+    insertion points) bin as length 1, the tabix convention."""
+    import numpy as np
+
+    beg0 = _col_np(batch, "start") - 1
+    return _contigs(batch), beg0, np.maximum(_col_np(batch, "end"), beg0 + 1)
+
+
+def _gff_span(batch):
+    return _contigs(batch), _col_np(batch, "start") - 1, _col_np(batch, "end")
+
+
+def _compress_default(path: str, compress, index_tbi: bool, sharded: bool) -> bool:
+    if compress is None:
+        # a sharded directory path carries no extension signal
+        compress = sharded or path.endswith((".gz", ".bgz"))
+    if index_tbi and not compress:
+        # fail fast, before any part is written
+        raise ValueError("tabix index requires BGZF-compressed output")
+    return compress
 
 
 def write_sam(df: DataFrame, path: str, header: SAMHeader,
               sharded: bool = False) -> None:
     from hadoop_bam_spark.formats import sam_vec
 
-    _write_text_parts(
-        df, SAM_COLS, path, path + ".__parts__", header.text,
-        lambda r: format_sam_line(tuple(r)), compress=False,
-        chunk_fn=sam_vec.format_sam_chunk,
-        shard_ext=".sam" if sharded else None,
-    )
+    _write(df, path, _TextCodec("sam", ".sam", SAM_COLS, sam_vec.format_sam_chunk,
+                                False, header.text), sharded)
 
 
 def _ensure_vcf_samples(df: DataFrame, header: VCFHeader) -> VCFHeader:
@@ -599,6 +709,27 @@ def _ensure_vcf_samples(df: DataFrame, header: VCFHeader) -> VCFHeader:
     return patched
 
 
+def _vcf_chunk(samples, batch) -> bytes:
+    from hadoop_bam_spark.formats import vcf_vec
+
+    out = vcf_vec.format_vcf_chunk(batch, samples)
+    if out is None:  # ragged genotype shapes -> per-row formatter
+        out = "".join(
+            format_vcf_line(r, samples) + "\n" for r in _vcf_batch_rows(batch)
+        ).encode("utf-8", "surrogateescape")
+    return out
+
+
+def _vcf_codec(header: VCFHeader, compress: bool, index_tbi: bool = False) -> _TextCodec:
+    from hadoop_bam_spark.formats.tabix import FMT_VCF
+
+    return _TextCodec(
+        "vcf", ".vcf", VCF_COLS, functools.partial(_vcf_chunk, header.samples),
+        compress, header.text,
+        tabix=((FMT_VCF, 1, 2, 0), _vcf_span) if index_tbi else None,
+    )
+
+
 def write_vcf(
     df: DataFrame, path: str, header: VCFHeader, compress: Optional[bool] = None,
     index_tbi: bool = False, sharded: bool = False,
@@ -606,9 +737,10 @@ def write_vcf(
     """Write a VCF_SCHEMA DataFrame as one valid VCF (.vcf or BGZF .vcf.bgz —
     default by extension, reference KeyIgnoringVCFOutputFormat.java:93-114).
 
-    ``index_tbi=True`` (BGZF output only) builds a ``.tbi`` tabix index with
-    one post-merge pass (meaningful when ``df`` is coordinate-sorted) so
-    interval reads prune splits at plan time (formats/tabix.py).
+    ``index_tbi=True`` (BGZF output only) builds a ``.tbi`` tabix index
+    from per-part stats accumulated in the executors (meaningful when
+    ``df`` is coordinate-sorted) so interval reads prune splits at plan
+    time (formats/tabix.py).
 
     ``sharded=True``: ``path`` becomes a DIRECTORY of complete standalone
     VCFs (``part-NNNNN.vcf`` / ``.vcf.bgz`` — own header, own BGZF EOF,
@@ -616,40 +748,9 @@ def write_vcf(
     same rationale as ``write_bam(sharded=True)``: no output byte ever
     funnels through the driver, the commit is a rename, and the VCF
     source reads the directory natively."""
-    if sharded and compress is None:
-        compress = True  # directory path carries no extension signal
-    if compress is None:
-        compress = path.endswith((".gz", ".bgz"))
-    if index_tbi and not compress:
-        # fail fast, before any part is written
-        raise ValueError("tabix index requires BGZF-compressed output")
+    compress = _compress_default(path, compress, index_tbi, sharded)
     header = _ensure_vcf_samples(df, header)
-    samples = header.samples
-
-    if sharded and index_tbi:
-        _write_vcf_shards_indexed(df, path, header.text, samples)
-        return
-    if index_tbi:
-        _write_vcf_parts_indexed(df, path, header.text, samples)
-        return
-
-    def line(r):
-        return format_vcf_line(tuple(r), samples)
-
-    def chunk(b):
-        from hadoop_bam_spark.formats import vcf_vec
-
-        out = vcf_vec.format_vcf_chunk(b, samples)
-        if out is None:  # ragged genotype shapes -> per-row formatter
-            out = "".join(
-                format_vcf_line(r, samples) + "\n" for r in _vcf_batch_rows(b)
-            ).encode("utf-8", "surrogateescape")
-        return out
-
-    _write_text_parts(df, VCF_COLS, path, path + ".__parts__", header.text, line,
-                      compress, chunk_fn=chunk,
-                      shard_ext=(".vcf.bgz" if compress else ".vcf")
-                      if sharded else None)
+    _write(df, path, _vcf_codec(header, compress, index_tbi), sharded)
 
 
 def _vcf_batch_rows(batch):
@@ -678,96 +779,77 @@ def _vcf_batch_rows(batch):
         )
 
 
-def _write_vcf_shards_indexed(df: DataFrame, path: str, header_text: str,
-                              samples: list[str]) -> None:
-    """Sharded BGZF VCF with a per-shard ``.tbi`` built in-task: the shard
-    includes its own header through the same BGZF writer, so the stats'
-    voffsets are file-absolute and no offset shifting is needed."""
-    from hadoop_bam_spark.formats.bai import PartIndexStats, merge_part_stats
-    from hadoop_bam_spark.formats.tabix import FMT_VCF, TabixIndex, write_tabix
+class _BcfCodec(_Codec):
+    """BGZF BCF2: bcf_venc blobs -> BGZF. A batch whose shape falls
+    outside the vectorized fast path (VecUnsupported) degrades to the
+    scalar per-record encoder for that batch only — same contract as the
+    BCF read path. With ``index_csi`` the per-record CSI stats accumulate
+    INLINE from the encoder's (rid, beg0, end0) arrays and the writer's
+    analytic voffsets — no post-merge re-decode of the output."""
 
-    parts_dir = path + ".__parts__"
+    ext, fmt = ".bcf", "bcf"
+    cols = tuple(VCF_COLS)
 
-    def write_part(idx: int, rows):
-        part_path = fs.join(parts_dir, f"part-{idx:05d}.vcf.bgz")
-        stats = PartIndexStats()
+    def __init__(self, bhdr, index_csi: bool = False):
+        from hadoop_bam_spark.formats import bcf as bcfmod
+
+        self.bhdr, self.index_csi = bhdr, index_csi
+        self.head = _bgzf_bytes(bcfmod.encode_header(bhdr))
+        self.tail = bgzf.BGZF_EOF
+        self.sidecar_exts = (".csi",) if index_csi else ()
+
+    def body(self, f, batches):
+        import numpy as np
+
+        from hadoop_bam_spark.formats import bcf as bcfmod
+        from hadoop_bam_spark.formats.bam_venc import reg2bin_vec
+        from hadoop_bam_spark.formats.bcf_venc import BCFBatchEncoder, VecUnsupported
+        from hadoop_bam_spark.formats.csi import CSIPartStats
+
+        bhdr = self.bhdr
+        enc = BCFBatchEncoder(bhdr)
+        # default 14/5 == reg2bin_vec's scheme
+        stats = CSIPartStats() if self.index_csi else None
         nrec = 0
-        with fs.open_file(part_path, "wb") as f:
-            w = bgzf.BGZFWriter(f, write_terminator=True)
-            w.write(header_text.encode())
-            for r in rows:
-                at = w.tell_voffset()
-                w.write((format_vcf_line(tuple(r), samples) + "\n").encode())
-                beg0 = int(r[1]) - 1
-                end0 = beg0 + max(len(r[4] or "N"), 1)
-                stats.add(r[0], beg0, end0, True, at, w.tell_voffset())
-                nrec += 1
-            w.close()
-        size = fs.file_size(part_path)
-        names = list(stats.order)
-        merged = merge_part_stats([(stats, size)], 0, names)
-        merged.pop("__n_no_coor__")
-        idx_t = TabixIndex(
-            names, [merged[n] for n in names], FMT_VCF, 1, 2, 0, ord("#"), 0, 0
-        )
-        write_tabix(idx_t, part_path + ".tbi")
-        return (idx, part_path, nrec)
-
-    parts = _collect_parts(df, VCF_COLS, parts_dir, write_part)
-    _commit_shards(path, parts_dir, [p for _, p, _ in parts], [".tbi"],
-                   records=[n for _, _, n in parts], fmt="vcf")
-
-
-def _write_vcf_parts_indexed(df: DataFrame, path: str, header_text: str,
-                             samples: list[str]) -> None:
-    """BGZF VCF write with the .tbi built from per-part stats accumulated in
-    the executors (part-local voffsets, driver offset-shift merge) — no
-    post-merge re-read of the output (formats/bai.py merge machinery)."""
-    from hadoop_bam_spark.formats.bai import PartIndexStats, merge_part_stats
-    from hadoop_bam_spark.formats.tabix import FMT_VCF, TabixIndex, write_tabix
-
-    parts_dir = path + ".__parts__"
-
-    def write_part(idx: int, rows):
-        part_path = fs.join(parts_dir, f"part-{idx:05d}")
-        stats = PartIndexStats()
-        with fs.open_file(part_path, "wb") as f:
-            w = bgzf.BGZFWriter(f, write_terminator=False)
-            for r in rows:
-                at = w.tell_voffset()
-                w.write((format_vcf_line(tuple(r), samples) + "\n").encode())
-                beg0 = int(r[1]) - 1
-                end0 = beg0 + max(len(r[4] or "N"), 1)  # pos + len(ref)
-                stats.add(r[0], beg0, end0, True, at, w.tell_voffset())
-            w.close()
-        return (idx, part_path, fs.file_size(part_path), stats)
-
-    parts = _collect_parts(df, VCF_COLS, parts_dir, write_part)
-    with fs.open_file(path, "wb") as out:
-        w = bgzf.BGZFWriter(out, write_terminator=False)
-        w.write(header_text.encode())
+        w = bgzf.BGZFWriter(f, write_terminator=False)
+        for batch in batches:
+            try:
+                blob, rec_lens, (rid, beg0, end0) = enc.encode_batch(batch)
+                u0 = w.u_total
+                w.write(blob)
+                nrec += len(rec_lens)
+                if stats is not None and len(rec_lens):
+                    u_starts = u0 + np.concatenate([[0], np.cumsum(rec_lens[:-1])])
+                    u_ends = u_starts + rec_lens
+                    bins = reg2bin_vec(beg0, end0)
+                    vof = w.voffset_of_u
+                    for i in range(len(rec_lens)):
+                        stats.add(int(rid[i]), int(bins[i]),
+                                  vof(int(u_starts[i])), vof(int(u_ends[i])))
+            except VecUnsupported:
+                for row in _vcf_batch_rows(batch):
+                    u0 = w.u_total
+                    rec = bcfmod.encode_record(row, bhdr)
+                    w.write(rec)
+                    nrec += 1
+                    if stats is not None:
+                        stats.add_record(
+                            bhdr.contig_index[row[0]], row[1] - 1, row[2],
+                            w.voffset_of_u(u0), w.voffset_of_u(u0 + len(rec)),
+                        )
+        pend = w.voffset_of_u(w.u_total)
         w.close()
-        header_len = out.tell()
-        for _, part_path, _, _ in parts:
-            with fs.open_file(part_path, "rb") as f:
-                shutil.copyfileobj(f, out)
-        out.write(bgzf.BGZF_EOF)
-    fs.remove_tree(parts_dir)
-    names: list[str] = []
-    seen = set()
-    for _, _, _, st in parts:
-        for k in st.order:
-            if k not in seen:
-                seen.add(k)
-                names.append(k)
-    merged = merge_part_stats(
-        [(st, size) for _, _, size, st in parts], header_len, names
-    )
-    merged.pop("__n_no_coor__")
-    idx = TabixIndex(
-        names, [merged[n] for n in names], FMT_VCF, 1, 2, 0, ord("#"), 0, 0
-    )
-    write_tabix(idx, path + ".tbi")
+        size = _body_size(w)
+        if stats is not None:
+            stats.remap_part_end(pend, size << 16)
+        return stats, nrec, size
+
+    def sidecars(self, path, parts, header_len):
+        if self.index_csi:
+            from hadoop_bam_spark.formats import csi
+
+            idx = csi.csi_from_part_stats(parts, header_len, len(self.bhdr.contigs))
+            csi.write_csi(idx, path + ".csi", open_fn=fs.open_file)
 
 
 def write_bcf(df: DataFrame, path: str, header: "VCFHeader",
@@ -777,9 +859,10 @@ def write_bcf(df: DataFrame, path: str, header: "VCFHeader",
     block, BGZF terminator appended last (reference BCFRecordWriter close
     semantics, BCFRecordWriter.java:165-193).
 
-    ``index_csi=True`` builds a ``.csi`` binning index from one pass over
-    the merged output (meaningful when ``df`` is coordinate-sorted) so
-    interval reads prune BGZF splits at plan time (formats/csi.py).
+    ``index_csi=True`` builds a ``.csi`` binning index from the per-part
+    stats accumulated during the executor writes (meaningful when ``df``
+    is coordinate-sorted) so interval reads prune BGZF splits at plan
+    time (formats/csi.py).
 
     ``sharded=True``: ``path`` becomes a DIRECTORY of complete standalone
     BCFs (own header block + BGZF EOF, per-shard ``.csi`` when
@@ -788,128 +871,8 @@ def write_bcf(df: DataFrame, path: str, header: "VCFHeader",
     from hadoop_bam_spark.formats import bcf as bcfmod
 
     header = _ensure_vcf_samples(df, header)
-    bhdr = bcfmod.parse_bcf_header_text(header.text)
-    parts_dir = path + ".__parts__"
-
-    def write_part_batches(idx: int, batches):
-        """Columnar part write: Arrow batches -> bcf_venc blobs -> BGZF.
-
-        A batch whose shape falls outside the vectorized fast path
-        (VecUnsupported) degrades to the scalar per-record encoder for
-        that batch only — same contract as the BCF read path. With
-        ``index_csi`` the per-record CSI stats accumulate INLINE from the
-        encoder's (rid, beg0, end0) arrays and the writer's analytic
-        voffsets — no post-merge re-decode of the output (the r5 path
-        spent ~13x the write time re-reading it)."""
-        import numpy as np
-
-        from hadoop_bam_spark.formats.bam_venc import reg2bin_vec
-        from hadoop_bam_spark.formats.bcf_venc import (
-            BCFBatchEncoder,
-            VecUnsupported,
-        )
-
-        part_path = fs.join(
-            parts_dir, f"part-{idx:05d}.bcf" if sharded else f"part-{idx:05d}"
-        )
-        enc = BCFBatchEncoder(bhdr)
-        stats = None
-        if index_csi:
-            from hadoop_bam_spark.formats.csi import CSIPartStats
-
-            stats = CSIPartStats()  # default 14/5 == reg2bin_vec's scheme
-        nrec = 0
-        hdr_len = 0
-        with fs.open_file(part_path, "wb") as f:
-            if sharded:
-                # a shard is a complete standalone BCF with the MERGED
-                # file's exact layout: the header closes its own BGZF
-                # stream so records begin on a block boundary (the reader
-                # and the part-stats CSI rebase both assume it), and the
-                # EOF terminator is appended after the record stream
-                hw = bgzf.BGZFWriter(f, write_terminator=False)
-                hw.write(bcfmod.encode_header(bhdr))
-                hw.close()
-                hdr_len = f.tell()
-            w = bgzf.BGZFWriter(f, write_terminator=False)
-            for batch in batches:
-                try:
-                    blob, rec_lens, (rid, beg0, end0) = enc.encode_batch(batch)
-                    u0 = w.u_total
-                    w.write(blob)
-                    nrec += len(rec_lens)
-                    if stats is not None and len(rec_lens):
-                        u_starts = u0 + np.concatenate(
-                            [[0], np.cumsum(rec_lens[:-1])]
-                        )
-                        u_ends = u_starts + rec_lens
-                        bins = reg2bin_vec(beg0, end0)
-                        add = stats.add
-                        vof = w.voffset_of_u
-                        for i in range(len(rec_lens)):
-                            add(
-                                int(rid[i]), int(bins[i]),
-                                vof(int(u_starts[i])), vof(int(u_ends[i])),
-                            )
-                except VecUnsupported:
-                    for row in _vcf_batch_rows(batch):
-                        u0 = w.u_total
-                        rec = bcfmod.encode_record(row, bhdr)
-                        w.write(rec)
-                        nrec += 1
-                        if stats is not None:
-                            stats.add_record(
-                                bhdr.contig_index[row[0]], row[1] - 1, row[2],
-                                w.voffset_of_u(u0),
-                                w.voffset_of_u(u0 + len(rec)),
-                            )
-            pend = w.voffset_of_u(w.u_total) if stats is not None else None
-            w.close()
-            if sharded:
-                f.write(bgzf.BGZF_EOF)
-        size = fs.file_size(part_path)
-        if sharded:
-            size -= hdr_len + len(bgzf.BGZF_EOF)  # record-stream length only
-        if stats is not None:
-            stats.remap_part_end(pend, size << 16)
-        if sharded and index_csi:
-            from hadoop_bam_spark.formats import csi as csi_mod
-
-            idx_c = csi_mod.csi_from_part_stats(
-                [(stats, size)], hdr_len, len(bhdr.contigs)
-            )
-            csi_mod.write_csi(idx_c, part_path + ".csi", open_fn=fs.open_file)
-        return (idx, part_path, size, stats, nrec)
-
-    parts = _collect_parts_arrow(
-        df.select(*VCF_COLS), parts_dir, write_part_batches
-    )
-    if sharded:
-        _commit_shards(path, parts_dir, [p for _, p, _, _, _ in parts],
-                       [".csi"] if index_csi else [],
-                       records=[n for _, _, _, _, n in parts], fmt="bcf")
-        return
-    with fs.open_file(path, "wb") as out:
-        w = bgzf.BGZFWriter(out, write_terminator=False)
-        w.write(bcfmod.encode_header(bhdr))
-        w.close()
-        header_len = out.tell()
-        for _, part_path, _, _, _ in parts:
-            with fs.open_file(part_path, "rb") as f:
-                shutil.copyfileobj(f, out)
-        out.write(bgzf.BGZF_EOF)
-    fs.remove_tree(parts_dir)
-    if index_csi:
-        from hadoop_bam_spark.formats import csi as csi_mod
-
-        idx = csi_mod.csi_from_part_stats(
-            [(stats, size) for _, _, size, stats, _ in parts],
-            header_len,
-            len(bhdr.contigs),
-        )
-        csi_mod.write_csi(idx, path + ".csi", open_fn=fs.open_file)
-
-
+    codec = _BcfCodec(bcfmod.parse_bcf_header_text(header.text), index_csi)
+    _write(df, path, codec, sharded)
 
 
 def _synthesize_name(r) -> str:
@@ -982,7 +945,15 @@ def _fastq_chunk(batch) -> bytes:
     return (blob + "\n").encode("utf-8", "surrogateescape")
 
 
-BED_COLS = ["contig", "start", "end", "name", "score", "strand", "rest"]
+def _bed_codec(compress: bool, index_tbi: bool = False) -> _TextCodec:
+    from hadoop_bam_spark.formats.bed import BED_COLS, format_bed_chunk
+    from hadoop_bam_spark.formats.tabix import FMT_ZERO_BASED
+
+    return _TextCodec(
+        "bed", ".bed", BED_COLS, format_bed_chunk, compress,
+        tabix=((FMT_ZERO_BASED, 1, 2, 3), _zero_based_span) if index_tbi else None,
+        empty_for_null=("rest",),
+    )
 
 
 def write_bed(
@@ -998,147 +969,65 @@ def write_bed(
     re-read shape as ``write_vcf``. ``sharded=True`` emits a directory
     of standalone shards (per-shard ``.tbi`` when requested) plus a
     manifest; no output byte funnels through the driver."""
-    from hadoop_bam_spark.formats.bed import format_bed_line
-
-    if sharded and compress is None:
-        compress = True
-    if compress is None:
-        compress = path.endswith((".gz", ".bgz"))
-    if index_tbi and not compress:
-        raise ValueError("tabix index requires BGZF-compressed output")
-    if index_tbi:
-        _write_bed_indexed(df, path, sharded)
-        return
-
-    def line(r):
-        return format_bed_line(tuple(r))
-
-    def chunk(b):
-        from hadoop_bam_spark.formats.bed import format_bed_chunk
-
-        return format_bed_chunk(b)
-
-    _write_text_parts(df, BED_COLS, path, path + ".__parts__", "", line,
-                      compress, chunk_fn=chunk,
-                      shard_ext=(".bed.bgz" if compress else ".bed")
-                      if sharded else None)
+    compress = _compress_default(path, compress, index_tbi, sharded)
+    _write(df, path, _bed_codec(compress, index_tbi), sharded)
 
 
-def _write_tabix_text_indexed(
-    df: DataFrame, cols, path: str, sharded: bool, line_fn, shard_ext: str,
-    tbi_factory, add_fn, header: str = "", fmt: str = "",
-) -> None:
-    """Shared BGZF + ``.tbi`` text write (BED / bedGraph / GFF bindings):
-    executor part files accumulate PartIndexStats while writing; sharded
-    mode commits standalone shards each with its own ``.tbi``, merged
-    mode concatenates the part bytes and offset-shifts the merged stats
-    — never a post-merge re-read. ``tbi_factory(names, merged)`` builds
-    the preset-specific TabixIndex; ``add_fn(stats, row, at, end)``
-    records one row's span."""
-    from hadoop_bam_spark.formats.bai import PartIndexStats, merge_part_stats
-    from hadoop_bam_spark.formats.tabix import write_tabix
+def _gff_chunk(batch) -> bytes:
+    """Arrow RecordBatch (GFF_COLS order, the attributes map split into
+    ``attr_keys`` / ``attr_vals`` list columns) -> newline-terminated
+    GFF3 lines, byte-identical to ``formats.gff.format_gff_line`` per row
+    (parity-tested). The attribute text is joined column-wise: a
+    ``to_pylist`` of the batch cost ~18 µs a row, mostly the lists."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    parts_dir = path + ".__parts__"
+    from hadoop_bam_spark.formats.gff import _score_text
 
-    if sharded:
-        def write_part(idx: int, rows):
-            part_path = fs.join(parts_dir, f"part-{idx:05d}{shard_ext}")
-            stats = PartIndexStats()
-            nrec = 0
-            with fs.open_file(part_path, "wb") as f:
-                w = bgzf.BGZFWriter(f, write_terminator=True)
-                if header:
-                    w.write(header.encode())
-                for r in rows:
-                    at = w.tell_voffset()
-                    w.write((line_fn(r) + "\n").encode())
-                    add_fn(stats, r, at, w.tell_voffset())
-                    nrec += 1
-                w.close()
-            size = fs.file_size(part_path)
-            names = list(stats.order)
-            merged = merge_part_stats([(stats, size)], 0, names)
-            merged.pop("__n_no_coor__")
-            write_tabix(tbi_factory(names, merged), part_path + ".tbi")
-            return (idx, part_path, nrec)
+    n = batch.num_rows
+    if n == 0:
+        return b""
+    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
 
-        parts = _collect_parts(df, cols, parts_dir, write_part)
-        _commit_shards(path, parts_dir, [p for _, p, _ in parts], [".tbi"],
-                       records=[n for _, _, n in parts], fmt=fmt)
-        return
+    def dot(c) -> pa.Array:
+        return pc.fill_null(pc.cast(c, pa.string()), ".")
 
-    def write_part(idx: int, rows):
-        part_path = fs.join(parts_dir, f"part-{idx:05d}")
-        stats = PartIndexStats()
-        with fs.open_file(part_path, "wb") as f:
-            w = bgzf.BGZFWriter(f, write_terminator=False)
-            for r in rows:
-                at = w.tell_voffset()
-                w.write((line_fn(r) + "\n").encode())
-                add_fn(stats, r, at, w.tell_voffset())
-            w.close()
-        return (idx, part_path, fs.file_size(part_path), stats)
-
-    parts = _collect_parts(df, cols, parts_dir, write_part)
-    with fs.open_file(path, "wb") as out:
-        header_len = 0
-        if header:
-            w = bgzf.BGZFWriter(out, write_terminator=False)
-            w.write(header.encode())
-            w.close()
-            header_len = out.tell()
-        for _, part_path, _, _ in parts:
-            with fs.open_file(part_path, "rb") as f:
-                shutil.copyfileobj(f, out)
-        out.write(bgzf.BGZF_EOF)
-    fs.remove_tree(parts_dir)
-    names: list[str] = []
-    seen = set()
-    for _, _, _, st in parts:
-        for k in st.order:
-            if k not in seen:
-                seen.add(k)
-                names.append(k)
-    merged = merge_part_stats(
-        [(st, size) for _, _, size, st in parts], header_len, names
+    keys, vals = col["attr_keys"], col["attr_vals"]
+    lens = pc.fill_null(pc.list_value_length(keys), 0)
+    pairs = pc.binary_join_element_wise(
+        pc.list_flatten(keys), pc.list_flatten(vals), "=",
+        null_handling="replace", null_replacement="None",  # f"{k}={None}"
     )
-    merged.pop("__n_no_coor__")
-    write_tabix(tbi_factory(names, merged), path + ".tbi")
-
-
-def _zero_based_tbi_factory(names, merged):
-    """BED/bedGraph tabix preset: generic format, 0-based half-open,
-    columns 1/2/3."""
-    from hadoop_bam_spark.formats.tabix import FMT_ZERO_BASED, TabixIndex
-
-    return TabixIndex(
-        names, [merged[n] for n in names], FMT_ZERO_BASED,
-        1, 2, 3, ord("#"), 0, 0,
+    offsets = pa.array(np.concatenate([[0], np.cumsum(lens)]), pa.int32())
+    attrs = pc.if_else(
+        pc.greater(lens, 0),
+        pc.binary_join(pa.ListArray.from_arrays(offsets, pairs), ";"),
+        pa.scalar("."),
     )
-
-
-def _zero_based_add(stats, r, at, end_v):
-    beg0 = int(r[1]) - 1
-    # zero-length features (end == start-1, insertion points) bin as
-    # length 1, the tabix convention
-    end0 = max(int(r[2]), beg0 + 1)
-    stats.add(r[0], beg0, end0, True, at, end_v)
-
-
-def _write_bed_indexed(df: DataFrame, path: str, sharded: bool) -> None:
-    """BGZF BED write with executor-accumulated tabix stats (the shared
-    _write_tabix_text_indexed machinery with the 0-based preset)."""
-    from hadoop_bam_spark.formats.bed import format_bed_line
-
-    _write_tabix_text_indexed(
-        df, BED_COLS, path, sharded,
-        lambda r: format_bed_line(tuple(r)), ".bed.bgz",
-        _zero_based_tbi_factory, _zero_based_add, fmt="bed",
+    score = pa.array([_score_text(s) for s in col["score"].to_pylist()],
+                     pa.string())
+    lines = pc.binary_join_element_wise(
+        pc.cast(col["contig"], pa.string()), dot(col["source"]),
+        dot(col["type"]), pc.cast(col["start"], pa.string()),
+        pc.cast(col["end"], pa.string()), score, dot(col["strand"]),
+        dot(col["phase"]), attrs, "\t",
     )
+    blob = pc.binary_join(
+        pa.ListArray.from_arrays(pa.array([0, n], pa.int32()), lines),
+        pa.scalar("\n"),
+    )[0].as_py()
+    return (blob + "\n").encode()
 
 
-GFF_COLS = ["contig", "source", "type", "start", "end", "score",
-            "strand", "phase", "attributes"]
+def _gff_codec(compress: bool, index_tbi: bool = False) -> _TextCodec:
+    from hadoop_bam_spark.formats.gff import GFF_COLS
+
+    return _TextCodec(
+        "gff", ".gff3", GFF_COLS, _gff_chunk, compress, "##gff-version 3\n",
+        tabix=((0, 1, 4, 5), _gff_span) if index_tbi else None,
+        split_maps={"attributes": ("attr_keys", "attr_vals")},
+    )
 
 
 def write_gff(
@@ -1151,70 +1040,49 @@ def write_gff(
     preset (generic/1-based, columns 1/4/5) from executor-accumulated
     stats; ``sharded=True`` writes a directory of standalone shards —
     same shapes as ``write_bed``."""
-    from hadoop_bam_spark.formats.gff import format_gff_line
-
-    if sharded and compress is None:
-        compress = True
-    if compress is None:
-        compress = path.endswith((".gz", ".bgz"))
-    if index_tbi and not compress:
-        raise ValueError("tabix index requires BGZF-compressed output")
-    header = "##gff-version 3\n"
-
-    def line(r):
-        return format_gff_line(_gff_row(r))
-
-    if index_tbi:
-        _write_gff_indexed(df, path, header, sharded)
-        return
-    _write_text_parts(df, GFF_COLS, path, path + ".__parts__", header, line,
-                      compress,
-                      shard_ext=(".gff3.bgz" if compress else ".gff3")
-                      if sharded else None)
-
-
-def _gff_row(r) -> tuple:
-    """Spark Row -> GFF tuple (map column arrives as a dict already via
-    the Row path; guard None)."""
-    t = tuple(r)
-    return t[:8] + (dict(t[8]) if t[8] else {},)
-
-
-def _write_gff_indexed(df: DataFrame, path: str, header: str,
-                       sharded: bool) -> None:
-    """BGZF GFF3 write with executor-accumulated tabix stats (the shared
-    _write_tabix_text_indexed machinery with the GFF preset: generic
-    format, 1-based inclusive, cols 1/4/5)."""
-    from hadoop_bam_spark.formats.gff import format_gff_line
-    from hadoop_bam_spark.formats.tabix import TabixIndex
-
-    def _tbi(names, merged):
-        return TabixIndex(
-            names, [merged[n] for n in names], 0, 1, 4, 5, ord("#"), 0, 0
-        )
-
-    def _add(stats, r, at, end_v):
-        stats.add(r[0], int(r[3]) - 1, int(r[4]), True, at, end_v)
-
-    _write_tabix_text_indexed(
-        df, GFF_COLS, path, sharded,
-        lambda r: format_gff_line(_gff_row(r)), ".gff3.bgz",
-        _tbi, _add, header=header, fmt="gff",
-    )
+    compress = _compress_default(path, compress, index_tbi, sharded)
+    _write(df, path, _gff_codec(compress, index_tbi), sharded)
 
 
 def write_fastq(df: DataFrame, path: str, sharded: bool = False) -> None:
-    def line(r):
-        return f"@{_synthesize_name(r)}\n{r.sequence}\n+\n{r.quality}"
-
-    _write_text_parts(df, FASTQ_COLS, path, path + ".__parts__", "", line, False,
-                      chunk_fn=_fastq_chunk,
-                      shard_ext=".fastq" if sharded else None)
+    _write(df, path, _TextCodec("fastq", ".fastq", FASTQ_COLS, _fastq_chunk, False),
+           sharded)
 
 
 _P33_TO_P64 = bytes(
     max(64, min(126, q + 31)) if 33 <= q <= 95 else q for q in range(256)
 )
+
+
+class _FastaCodec(_Codec):
+    """FASTA sections: a ``>name`` line wherever the contig changes, then
+    the sequence lines (the rows arrive contig-grouped, pos-sorted)."""
+
+    ext = ".fa"
+    cols = ("contig", "pos", "seq")
+
+    def __init__(self, index_fai: bool):
+        self.sidecar_exts = (".fai",) if index_fai else ()
+
+    def body(self, f, batches):
+        cur, nrec, size = None, 0, 0
+        for batch in batches:
+            out = []
+            for contig, seq in zip(batch.column("contig").to_pylist(),
+                                   batch.column("seq").to_pylist()):
+                if contig != cur:
+                    out.append(f">{contig}\n")
+                    cur = contig
+                out.append(seq + "\n")
+            blob = "".join(out).encode()
+            f.write(blob)
+            size += len(blob)
+            nrec += batch.num_rows
+        return None, nrec, size
+
+    def sidecars(self, path, parts, header_len):
+        if self.sidecar_exts:
+            build_fai(path, path + ".fai")
 
 
 def write_fasta(df: DataFrame, path: str, index_fai: bool = True) -> None:
@@ -1226,28 +1094,8 @@ def write_fasta(df: DataFrame, path: str, index_fai: bool = True) -> None:
     arbitrary — FASTA imposes none). ``index_fai=True`` adds a faidx sidecar
     so the fasta source plans one split per contig (requires the fixed line
     width faidx assumes; reference model ReferenceFragment.java:36-41)."""
-    parts_dir = path + ".__parts__"
     prepared = df.repartition("contig").sortWithinPartitions("contig", "pos")
-
-    def write_part(idx: int, rows):
-        part_path = fs.join(parts_dir, f"part-{idx:05d}")
-        with fs.open_file(part_path, "wb") as f:
-            cur = None
-            for r in rows:
-                if r.contig != cur:
-                    f.write(f">{r.contig}\n".encode())
-                    cur = r.contig
-                f.write((r.seq + "\n").encode())
-        return (idx, part_path)
-
-    parts = _collect_parts(prepared, ["contig", "pos", "seq"], parts_dir, write_part)
-    with fs.open_file(path, "wb") as out:
-        for _, part_path in parts:
-            with fs.open_file(part_path, "rb") as f:
-                shutil.copyfileobj(f, out)
-    fs.remove_tree(parts_dir)
-    if index_fai:
-        build_fai(path, path + ".fai")
+    _write(prepared, path, _FastaCodec(index_fai), sharded=False)
 
 
 def scan_fai_entries(
@@ -1383,28 +1231,8 @@ def _qseq_chunk(batch) -> bytes:
 def write_qseq(df: DataFrame, path: str, sharded: bool = False) -> None:
     """Inverse of the qseq source: N->'.', Sanger->Illumina quality
     (reference QseqOutputFormat.java:98-157)."""
-
-    def line(r):
-        qual = (r.quality or "").encode("latin-1").translate(_P33_TO_P64).decode("latin-1")
-        return "\t".join(
-            [
-                r.instrument or "",
-                str(r.run_number or 0),
-                str(r.lane or 0),
-                str(r.tile or 0),
-                str(r.xpos or 0),
-                str(r.ypos or 0),
-                r.index_sequence or "0",
-                str(r.read or 1),
-                (r.sequence or "").replace("N", "."),
-                qual,
-                "1" if r.filter_passed else "0",
-            ]
-        )
-
-    _write_text_parts(df, FASTQ_COLS, path, path + ".__parts__", "", line, False,
-                      chunk_fn=_qseq_chunk,
-                      shard_ext=".qseq" if sharded else None)
+    _write(df, path, _TextCodec("qseq", ".qseq", FASTQ_COLS, _qseq_chunk, False),
+           sharded)
 
 
 def write_parquet_reads(
@@ -1439,7 +1267,41 @@ def write_parquet_reads(
     )
 
 
-BEDGRAPH_COLS = ["contig", "start", "end", "value"]
+def _bedgraph_chunk(batch) -> bytes:
+    """Arrow RecordBatch (BEDGRAPH_COLS order) -> newline-terminated
+    bedGraph lines, byte-identical to
+    ``formats.bedgraph.format_bedgraph_line`` per row (parity-tested);
+    only the value text is formatted per row."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from hadoop_bam_spark.formats.bedgraph import _value_text
+
+    n = batch.num_rows
+    if n == 0:
+        return b""
+    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
+    value = pa.array([_value_text(v) for v in col["value"].to_pylist()], pa.string())
+    lines = pc.binary_join_element_wise(
+        pc.cast(col["contig"], pa.string()),
+        pc.cast(pc.subtract(col["start"], 1), pa.string()),
+        pc.cast(col["end"], pa.string()), value, "\t",
+    )
+    blob = pc.binary_join(
+        pa.ListArray.from_arrays(pa.array([0, n], pa.int32()), lines),
+        pa.scalar("\n"),
+    )[0].as_py()
+    return (blob + "\n").encode()
+
+
+def _bedgraph_codec(compress: bool, index_tbi: bool = False) -> _TextCodec:
+    from hadoop_bam_spark.formats.bedgraph import BEDGRAPH_COLS
+    from hadoop_bam_spark.formats.tabix import FMT_ZERO_BASED
+
+    return _TextCodec(
+        "bedgraph", ".bedgraph", BEDGRAPH_COLS, _bedgraph_chunk, compress,
+        tabix=((FMT_ZERO_BASED, 1, 2, 3), _zero_based_span) if index_tbi else None,
+    )
 
 
 def write_bedgraph(
@@ -1453,34 +1315,5 @@ def write_bedgraph(
     ``.tbi`` with the BED tabix preset (0-based flag, columns 1/2/3)
     from executor-accumulated stats; ``sharded=True`` writes a directory
     of standalone shards — same shapes as ``write_bed``."""
-    from hadoop_bam_spark.formats.bedgraph import format_bedgraph_line
-
-    if sharded and compress is None:
-        compress = True
-    if compress is None:
-        compress = path.endswith((".gz", ".bgz"))
-    if index_tbi and not compress:
-        raise ValueError("tabix index requires BGZF-compressed output")
-    if index_tbi:
-        _write_bedgraph_indexed(df, path, sharded)
-        return
-
-    def line(r):
-        return format_bedgraph_line(tuple(r))
-
-    _write_text_parts(df, BEDGRAPH_COLS, path, path + ".__parts__", "", line,
-                      compress,
-                      shard_ext=(".bedgraph.bgz" if compress else ".bedgraph")
-                      if sharded else None)
-
-
-def _write_bedgraph_indexed(df: DataFrame, path: str, sharded: bool) -> None:
-    """BGZF bedGraph write with executor-accumulated tabix stats (the
-    shared _write_tabix_text_indexed machinery, 0-based preset)."""
-    from hadoop_bam_spark.formats.bedgraph import format_bedgraph_line
-
-    _write_tabix_text_indexed(
-        df, BEDGRAPH_COLS, path, sharded,
-        lambda r: format_bedgraph_line(tuple(r)), ".bedgraph.bgz",
-        _zero_based_tbi_factory, _zero_based_add, fmt="bedgraph",
-    )
+    compress = _compress_default(path, compress, index_tbi, sharded)
+    _write(df, path, _bedgraph_codec(compress, index_tbi), sharded)

@@ -67,9 +67,9 @@ class BEDDataSource(DataSource):
         return BEDReader(self.options)
 
     def streamWriter(self, schema, overwrite):
-        from hadoop_bam_spark.streaming.text_sink import bed_stream_writer
+        from hadoop_bam_spark.streaming.shard_sink import stream_writer
 
-        return bed_stream_writer(self.options)
+        return stream_writer("bed", self.options)
 
 
 class BEDReader(DataSourceReader):

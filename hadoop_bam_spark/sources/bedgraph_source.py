@@ -65,11 +65,9 @@ class BedGraphDataSource(DataSource):
         return BedGraphReader(self.options)
 
     def streamWriter(self, schema, overwrite):
-        from hadoop_bam_spark.streaming.text_sink import (
-            bedgraph_stream_writer,
-        )
+        from hadoop_bam_spark.streaming.shard_sink import stream_writer
 
-        return bedgraph_stream_writer(self.options)
+        return stream_writer("bedgraph", self.options)
 
 
 class BedGraphReader(DataSourceReader):

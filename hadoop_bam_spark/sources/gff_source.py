@@ -59,9 +59,9 @@ class GFFDataSource(DataSource):
         return GFFReader(self.options)
 
     def streamWriter(self, schema, overwrite):
-        from hadoop_bam_spark.streaming.text_sink import gff_stream_writer
+        from hadoop_bam_spark.streaming.shard_sink import stream_writer
 
-        return gff_stream_writer(self.options)
+        return stream_writer("gff", self.options)
 
 
 class GFFReader(DataSourceReader):

@@ -4,9 +4,10 @@ The reference is batch-only (SURVEY.md §2.9) — this module is part of the
 beyond-reference pipeline surface: streaming ingest of the same formats
 (``fastq_stream``, ``vcf_stream``, ``bam_stream``, ``bcf_stream``,
 ``cram_stream`` directory-tail sources), streaming shard sinks for
-BAM/VCF/CRAM/BCF
-(``writeStream.format("bam"|"vcf"|"cram"|"bcf")`` — rename-committed
-standalone shards, the producer side of the tail sources), and
+BAM/CRAM/BCF/VCF/BED/bedGraph/GFF3 (``writeStream.format(...)`` — one
+Arrow writer in ``shard_sink`` bound to the batch sinks' part codecs,
+rename-committed standalone shards, the producer side of the tail
+sources), and
 stateful/windowed processing of event streams,
 expressed with watermarks + windowed aggregation and
 ``applyInPandasWithState`` for custom state (sessionization, as-of

@@ -1,5 +1,6 @@
-"""Replay-safe shard-commit protocol shared by the four streaming sinks
-(bam/vcf/cram/bcf ``writeStream`` formats).
+"""Replay-safe shard-commit protocol of the streaming shard sinks
+(:mod:`hadoop_bam_spark.streaming.shard_sink`, every ``writeStream``
+file format).
 
 Spark's micro-batch contract: if the driver dies between the sink's
 ``commit()`` and the checkpoint advancing, the SAME ``batchId`` is
@@ -61,7 +62,7 @@ def commit_shards(dir_: str, messages, batch_id: int, ext: str) -> None:
     """Driver-side commit: supersede-then-rename + atomic per-batch
     manifest. ``messages`` are the sinks' WriterCommitMessages (Nones and
     empty partitions filtered here); ``ext`` names the shard suffix
-    (".bam", ".vcf.bgz", ".cram", ".bcf")."""
+    (".bam", ".vcf.bgz", ...)."""
     staged = [m for m in messages if m is not None and getattr(m, "staged", None)]
     prefix = f"batch-{batch_id:05d}-"
     if not fs.exists(dir_):

@@ -4,6 +4,7 @@ sinks.write_bed). Tabix machinery reference: VCFInputFormat.java:388-472
 applied format-agnostically."""
 
 import gzip
+import json
 import os
 import random
 
@@ -182,6 +183,11 @@ class TestSourceSink:
         assert parts
         for part in parts:
             assert os.path.exists(os.path.join(out, part + ".tbi"))
+        man = json.load(open(os.path.join(out, "_manifest.json")))
+        assert man["format"] == "bed"
+        assert man["records"] == len(ROWS)
+        assert sorted(s["shard"] for s in man["shards"]) == sorted(parts)
+        assert sum(s["records"] for s in man["shards"]) == len(ROWS)
         back = bed_spark.read.format("bed").load(out)
         assert _collect(back) == _want()
 

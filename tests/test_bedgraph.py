@@ -72,6 +72,22 @@ class TestCodec:
         ))
         assert got == [parse_bedgraph_line(l) for l in lines]
 
+    def test_chunk_formatter_byte_parity(self):
+        """_bedgraph_chunk == format_bedgraph_line per row, incl.
+        whole, fractional, tiny, huge and non-finite values."""
+        import pyarrow as pa
+
+        from hadoop_bam_spark.sinks import _bedgraph_chunk
+
+        corpus = ROWS + [("chrX", 3, 9, v) for v in (
+            1e-7, 1e22, -0.0, 123456789.25, float("nan"), float("inf"))]
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array([r[i] for r in corpus], t) for i, t in enumerate(
+                (pa.string(), pa.int64(), pa.int64(), pa.float64()))],
+            names=["contig", "start", "end", "value"])
+        want = "".join(format_bedgraph_line(r) + "\n" for r in corpus).encode()
+        assert _bedgraph_chunk(batch) == want
+
     @pytest.mark.parametrize(
         "bad", ["chr1\t0\t10", "chr1\tx\t10\t1", "chr1\t9\t5\t1"]
     )

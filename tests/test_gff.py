@@ -61,6 +61,35 @@ class TestCodec:
             assert g[:8] == r[:8]
             assert dict(g[8]) == r[8]
 
+    def test_chunk_formatter_byte_parity(self):
+        """_gff_chunk (attributes as key/value lists, the sink's
+        layout) == format_gff_line per row, incl. null map, null value,
+        whole and fractional scores, on a sliced batch."""
+        import pyarrow as pa
+
+        from hadoop_bam_spark.sinks import _gff_chunk
+
+        corpus = [("skipped", None, None, 1, 1, None, None, None, {"z": "1"})] \
+            + ROWS + [
+                ("chrX", "s", "t", 5, 9, 1e-7, "+", 1, {"a": None, "b": "x=y"}),
+                ("chrX", "s", "t", 5, 9, -3.0, ".", 0, {"k": ""}),
+                ("chr0", None, None, 1, 1, None, None, None, None),
+            ]
+        lists = [list(r[8].items()) if r[8] is not None else None for r in corpus]
+        types = [pa.string(), pa.string(), pa.string(), pa.int64(), pa.int64(),
+                 pa.float64(), pa.string(), pa.int32()]
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array([r[i] for r in corpus], types[i]) for i in range(8)] + [
+                pa.array([[k for k, _ in m] if m is not None else None
+                          for m in lists], pa.list_(pa.string())),
+                pa.array([[v for _, v in m] if m is not None else None
+                          for m in lists], pa.list_(pa.string()))],
+            names=["contig", "source", "type", "start", "end", "score",
+                   "strand", "phase", "attr_keys", "attr_vals"]).slice(1)
+        want = "".join(format_gff_line(r[:8] + (r[8] or {},)) + "\n"
+                       for r in corpus[1:]).encode()
+        assert _gff_chunk(batch) == want
+
     def test_chunk_bails_on_malformed(self):
         good = format_gff_line(ROWS[0])
         for bad in ("c\t1\t2", "c\t.\t.\tx\t2\t.\t.\t.\t.",

@@ -396,6 +396,9 @@ class TestShardedVCFSink:
         assert len(shards) == 3
         man = json.load(open(os.path.join(out, "_manifest.json")))
         assert len(man["shards"]) == 3
+        n_src = src.count()
+        assert man["format"] == "vcf" and man["records"] == n_src
+        assert sum(s["records"] for s in man["shards"]) == n_src
         back = fmt_spark.read.format("vcf").load(out)
         assert same(src, back)
         # a single shard stands alone: full header present

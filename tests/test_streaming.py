@@ -550,9 +550,9 @@ class TestManifestDrivenTail:
     def test_replay_supersedes_mid_tail_total_exact(self, tmp_path):
         import copy
 
-        from hadoop_bam_spark.streaming.bam_sink import (
-            BamShardCommit as M,
-            BAMStreamWriter,
+        from hadoop_bam_spark.streaming.shard_sink import (
+            ShardCommit as M,
+            stream_writer,
         )
         from hadoop_bam_spark.streaming.bam_stream import BamStreamReader
 
@@ -567,7 +567,7 @@ class TestManifestDrivenTail:
         out.mkdir()
         staging = out / ".staging"
         staging.mkdir()
-        w = BAMStreamWriter({"path": str(out), "header": str(hdr)})
+        w = stream_writer("bam", {"path": str(out), "header": str(hdr)})
         rdr = BamStreamReader({"path": str(out)})
 
         # attempt 1 of batch 0 is MID-COMMIT: one shard already renamed
@@ -661,13 +661,13 @@ class TestStreamSinkCommitProtocol:
     visibility is the rename, abort leaves nothing half-visible."""
 
     def _writer(self, tmp_path):
-        from hadoop_bam_spark.streaming.bam_sink import BAMStreamWriter
+        from hadoop_bam_spark.streaming.shard_sink import stream_writer
 
         hdr = tmp_path / "h.sam"
         hdr.write_text("@HD\tVN:1.6\n@SQ\tSN:chr1\tLN:100\n")
         out = tmp_path / "out"
         out.mkdir()
-        return BAMStreamWriter({"path": str(out), "header": str(hdr)}), out
+        return stream_writer("bam", {"path": str(out), "header": str(hdr)}), out
 
     def _stage(self, out, name, data=b"x"):
         staging = out / ".staging"
@@ -677,16 +677,16 @@ class TestStreamSinkCommitProtocol:
     def test_commit_renames_and_manifests(self, tmp_path):
         import json
 
-        from hadoop_bam_spark.streaming.bam_sink import BamShardCommit
+        from hadoop_bam_spark.streaming.shard_sink import ShardCommit
 
         w, out = self._writer(tmp_path)
         self._stage(out, "attempt-1-p00000.bam", b"A")
         self._stage(out, "attempt-2-p00001.bam", b"B")
         msgs = [
-            BamShardCommit(staged="attempt-1-p00000.bam", records=3),
+            ShardCommit(staged="attempt-1-p00000.bam", records=3),
             None,  # lost task slot
-            BamShardCommit(staged=None, records=0),  # empty partition
-            BamShardCommit(staged="attempt-2-p00001.bam", records=4),
+            ShardCommit(staged=None, records=0),  # empty partition
+            ShardCommit(staged="attempt-2-p00001.bam", records=4),
         ]
         w.commit(msgs, batchId=7)
         files = sorted(os.listdir(out))
@@ -699,20 +699,20 @@ class TestStreamSinkCommitProtocol:
         assert all(e["batch"] == 7 for e in man)
         # a later batch adds its OWN per-batch manifest (union grows)
         self._stage(out, "attempt-9-p00000.bam", b"C")
-        from hadoop_bam_spark.streaming.bam_sink import BamShardCommit as M
+        from hadoop_bam_spark.streaming.shard_sink import ShardCommit as M
 
         w.commit([M(staged="attempt-9-p00000.bam", records=1)], batchId=8)
         man2 = read_manifest(str(out))
         assert len(man2) == len(man) + 1
 
     def test_abort_discards_staged_only(self, tmp_path):
-        from hadoop_bam_spark.streaming.bam_sink import BamShardCommit
+        from hadoop_bam_spark.streaming.shard_sink import ShardCommit
 
         w, out = self._writer(tmp_path)
         (out / "batch-00001-00000.bam").write_bytes(b"KEEP")
         self._stage(out, "attempt-5-p00000.bam")
         w.abort(
-            [BamShardCommit(staged="attempt-5-p00000.bam", records=2), None],
+            [ShardCommit(staged="attempt-5-p00000.bam", records=2), None],
             batchId=2,
         )
         assert not (out / ".staging" / "attempt-5-p00000.bam").exists()
@@ -723,7 +723,7 @@ class TestStreamSinkCommitProtocol:
         replays the SAME batchId. A replay with FEWER non-empty
         partitions must not strand the first attempt's extra shard or
         duplicate manifest lines (VERDICT r7 #1b)."""
-        from hadoop_bam_spark.streaming.bam_sink import BamShardCommit as M
+        from hadoop_bam_spark.streaming.shard_sink import ShardCommit as M
         from hadoop_bam_spark.streaming.shard_commit import read_manifest
 
         w, out = self._writer(tmp_path)
@@ -748,7 +748,7 @@ class TestStreamSinkCommitProtocol:
     def test_replay_empty_batch_supersedes(self, tmp_path):
         """A replay that yields NO rows must remove the first attempt's
         shards and its manifest."""
-        from hadoop_bam_spark.streaming.bam_sink import BamShardCommit as M
+        from hadoop_bam_spark.streaming.shard_sink import ShardCommit as M
         from hadoop_bam_spark.streaming.shard_commit import read_manifest
 
         w, out = self._writer(tmp_path)
@@ -765,7 +765,7 @@ class TestStreamSinkCommitProtocol:
         import pytest as _pytest
 
         from hadoop_bam_spark import fs as fsmod
-        from hadoop_bam_spark.streaming.bam_sink import BamShardCommit as M
+        from hadoop_bam_spark.streaming.shard_sink import ShardCommit as M
         from hadoop_bam_spark.streaming.shard_commit import read_manifest
 
         w, out = self._writer(tmp_path)
@@ -824,35 +824,18 @@ class TestStreamSinkCommitProtocol:
         )
         out = tmp_path / f"out_{fmt}"
         out.mkdir()
-        if fmt == "bam":
-            from hadoop_bam_spark.streaming.bam_sink import (
-                BamShardCommit as Msg,
-                BAMStreamWriter as W,
-            )
+        from hadoop_bam_spark.streaming.shard_sink import (
+            ShardCommit as Msg,
+            stream_writer,
+        )
 
-            hdr, ext = sam_hdr, ".bam"
-        elif fmt == "vcf":
-            from hadoop_bam_spark.streaming.vcf_sink import (
-                VcfShardCommit as Msg,
-                VCFStreamWriter as W,
-            )
-
-            hdr, ext = vcf_hdr, ".vcf.bgz"
-        elif fmt == "cram":
-            from hadoop_bam_spark.streaming.cram_sink import (
-                CramShardCommit as Msg,
-                CRAMStreamWriter as W,
-            )
-
-            hdr, ext = sam_hdr, ".cram"
-        else:
-            from hadoop_bam_spark.streaming.bcf_sink import (
-                BcfShardCommit as Msg,
-                BCFStreamWriter as W,
-            )
-
-            hdr, ext = vcf_hdr, ".bcf"
-        w = W({"path": str(out), "header": str(hdr)})
+        hdr, ext = {
+            "bam": (sam_hdr, ".bam"),
+            "vcf": (vcf_hdr, ".vcf.bgz"),
+            "cram": (sam_hdr, ".cram"),
+            "bcf": (vcf_hdr, ".bcf"),
+        }[fmt]
+        w = stream_writer(fmt, {"path": str(out), "header": str(hdr)})
         self._stage(out, f"attempt-1-p00000{ext}", b"A")
         self._stage(out, f"attempt-2-p00001{ext}", b"B")
         w.commit(
@@ -925,9 +908,9 @@ class TestMidFlightCommitWindow:
 
         from hadoop_bam_spark.formats import bam as bammod
         from hadoop_bam_spark.formats.sam import SAMHeader
-        from hadoop_bam_spark.streaming.bam_sink import (
-            BamShardCommit as M,
-            BAMStreamWriter,
+        from hadoop_bam_spark.streaming.shard_sink import (
+            ShardCommit as M,
+            stream_writer,
         )
         from hadoop_bam_spark.streaming.bam_stream import BamStreamReader
 
@@ -952,7 +935,7 @@ class TestMidFlightCommitWindow:
         out.mkdir()
         staging = out / ".staging"
         staging.mkdir()
-        w = BAMStreamWriter({"path": str(out), "header": str(hdr_p)})
+        w = stream_writer("bam", {"path": str(out), "header": str(hdr_p)})
         rdr = BamStreamReader({"path": str(out)})
 
         # batch 0 committed cleanly; the reader has consumed it
